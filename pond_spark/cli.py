@@ -296,6 +296,27 @@ def parse_query_args(
     return q
 
 
+def _to_query(df, parsed: ParsedQuery):
+    """The parsed verbs as one Query, whose validate() applies the
+    reference's CommitQuery exclusions to the batch and the streaming
+    paths alike."""
+    from pond_spark.query import Query
+
+    o = parsed.options
+    query = Query(df).filter(parsed.to_filter_spec())
+    if parsed.group_site is not None:
+        query = query.group_site(*parsed.group_site)
+    if parsed.window is not None:
+        query = query.window(*parsed.window)
+    if o.last:
+        query = query.last()
+    if o.follow:
+        query = query.follow()
+    if o.continue_:
+        query = query.continue_()
+    return query
+
+
 def build(
     spark,
     df,
@@ -311,8 +332,6 @@ def build(
     """
     from pyspark.sql import functions as F
 
-    from pond_spark.query import Query
-
     o = parsed.options
     if o.follow or o.continue_:
         raise QueryValidationError(
@@ -320,14 +339,7 @@ def build(
             "pond_spark.streaming.follow with this FilterSpec"
         )
 
-    query = Query(df).filter(parsed.to_filter_spec())
-    if parsed.group_site is not None:
-        query = query.group_site(*parsed.group_site)
-    if parsed.window is not None:
-        query = query.window(*parsed.window)
-    if o.last:
-        query = query.last()
-    out = query.to_df()
+    out = _to_query(df, parsed).to_df()
 
     if o.age_only:
         from pond_spark.operators.accumulate import age_only
@@ -1507,6 +1519,13 @@ def main(argv: list[str] | None = None) -> int:
         _load_table(hostnames_table) if hostnames_table is not None else None
     )
     if parsed.options.follow or parsed.options.continue_:
+        # FOLLOW/CONTINUE stream the filter only: WINDOW, GROUP_SITE
+        # and LAST must be refused here, not silently dropped
+        try:
+            _to_query(df, parsed).validate()
+        except QueryValidationError as e:
+            print(str(e), file=sys.stderr)
+            return 2
         return _run_follow(
             spark, store, parsed, follow_duration, max_batch_rows
         )

@@ -40,7 +40,7 @@ SmallDatagram fast path (/root/reference/src/Filter.hxx:97-107).
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -85,9 +85,6 @@ class FilterSpec:
             )
         if (self.status_begin is None) != (self.status_end is None):
             raise QueryValidationError("status range needs both begin and end")
-
-    def with_(self, **kw) -> "FilterSpec":
-        return replace(self, **kw)
 
     @property
     def has_one_site(self) -> bool:

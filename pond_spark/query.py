@@ -47,23 +47,13 @@ class WindowSpec:
 class Query:
     """Builder over a log-shaped DataFrame.
 
-    ``ts_col``/``id_col``/``site_col`` parameterize the three "hot"
-    columns (the reference's SmallDatagram fast path,
-    /root/reference/src/SmallDatagram.hxx:13-29) so the same engine
-    serves any log-shaped table.
+    The three "hot" columns (the reference's SmallDatagram fast path,
+    src/SmallDatagram.hxx:13-29) are the log schema's ``timestamp``,
+    ``id`` and ``site``.
     """
 
-    def __init__(
-        self,
-        df: DataFrame,
-        ts_col: str = "timestamp",
-        id_col: str = "id",
-        site_col: str = "site",
-    ) -> None:
+    def __init__(self, df: DataFrame) -> None:
         self._df = df
-        self.ts = ts_col
-        self.id = id_col
-        self.site = site_col
         self._filter: FilterSpec | None = None
         self._window: WindowSpec | None = None
         self._group_site: WindowSpec | None = None
@@ -74,10 +64,7 @@ class Query:
     # -- verbs -----------------------------------------------------------
 
     def filter(self, spec: FilterSpec) -> "Query":
-        cols = dict(spec.columns)
-        cols.setdefault("timestamp", self.ts)
-        cols.setdefault("site", self.site)
-        self._filter = spec.with_(columns=cols)
+        self._filter = spec
         return self
 
     def window(self, max: int, skip: int = 0) -> "Query":
@@ -142,7 +129,7 @@ class Query:
         """Build the batch plan (FOLLOW/CONTINUE are built by
         pond_spark.streaming.follow from the same spec)."""
         self.validate()
-        ts, rid = F.col(self.ts), F.col(self.id)
+        ts, rid = F.col("timestamp"), F.col("id")
         df = self._filtered()
 
         if self._last:
@@ -199,18 +186,18 @@ class Query:
         ordering.
         """
         spec = self._group_site
-        site = F.col(self.site)
+        site = F.col("site")
 
         first_seen = (
             self._df.filter(site.isNotNull())
-            .groupBy(self.site)
-            .agg(F.min(self.id).alias("_first_id"))
+            .groupBy("site")
+            .agg(F.min("id").alias("_first_id"))
         )
         matched_sites = (
             matches.filter(site.isNotNull())
-            .select(self.site)
+            .select("site")
             .distinct()
-            .join(F.broadcast(first_seen), self.site)
+            .join(F.broadcast(first_seen), "site")
         )
         ranked = matched_sites.withColumn(
             "_site_rank",
@@ -222,12 +209,12 @@ class Query:
         out_cols = matches.columns
         return (
             matches.join(
-                F.broadcast(ranked.select(self.site, "_site_rank")), self.site
+                F.broadcast(ranked.select("site", "_site_rank")), "site"
             )
             .orderBy(
                 F.col("_site_rank").asc(),
-                F.col(self.ts).asc_nulls_first(),
-                F.col(self.id).asc(),
+                F.col("timestamp").asc_nulls_first(),
+                F.col("id").asc(),
             )
             .select(*out_cols)
         )

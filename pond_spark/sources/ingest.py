@@ -21,8 +21,8 @@ operators can't express.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -56,6 +56,59 @@ def parse_datagrams(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
+def token_bucket(
+    timestamps: Iterable,
+    tokens: float,
+    last_us: int | None,
+    rate: float,
+    cap: float,
+) -> tuple[list[bool], float, int | None]:
+    """Charge one token per record, in the given order, against a
+    bucket of capacity ``cap`` refilled at ``rate`` tokens/s of event
+    time; returns the per-record discard flags and the bucket's new
+    ``(tokens, last_us)`` so a caller can carry it to the next call.
+
+    The clock only advances: a null timestamp refills nothing, and a
+    late one must not rewind ``last_us`` — or the next on-time record
+    would re-credit refill time that was already granted."""
+    flags = []
+    for ts in timestamps:
+        if ts is not None and not pd.isna(ts):
+            now_us = int(ts.value // 1000)
+            if last_us is None:
+                last_us = now_us
+            elif now_us > last_us:
+                tokens = min(cap, tokens + rate * (now_us - last_us) / 1e6)
+                last_us = now_us
+        if tokens >= 1.0:
+            tokens -= 1.0
+            flags.append(False)
+        else:
+            flags.append(True)
+    return flags, tokens, last_us
+
+
+def split_charged(
+    df: DataFrame, site_col: str, type_col: str, message_type: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(charged, exempt)``: the message-type records with a site that
+    pay the bucket, and the rest with ``_discarded`` already False.
+
+    The two must PARTITION the frame under SQL three-valued logic: with
+    a NULL type, (type == msg) is NULL, so both a plain filter and its
+    ~negation exclude the row — it would silently vanish from the
+    union. coalesce(..., False) makes the condition two-valued; exempt
+    is then its exact complement."""
+    is_charged = F.coalesce(
+        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
+        F.lit(False),
+    )
+    return (
+        df.filter(is_charged),
+        df.filter(~is_charged).withColumn("_discarded", F.lit(False)),
+    )
+
+
 def rate_limit(
     df: DataFrame,
     rate: float,
@@ -85,41 +138,14 @@ def rate_limit(
     def bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # one pandas frame per site group, processed in (ts, id) order
         # — the token bucket is sequential by construction. Rows here
-        # are pre-filtered to charged ones (type == message_type with
-        # a site), so every row pays a token.
-        tokens = burst
-        prev_us: int | None = None
+        # are pre-filtered to charged ones, so every row pays a token.
         pdf = pdf.sort_values([ts_col, id_col], na_position="first")
-        out_flags = []
-        for ts in pdf[ts_col]:
-            now_us = (
-                int(ts.value // 1000) if ts is not None and not pd.isna(ts) else prev_us
-            )
-            if now_us is not None:
-                if prev_us is not None and now_us > prev_us:
-                    tokens = min(burst, tokens + rate * (now_us - prev_us) / 1e6)
-                prev_us = now_us
-            if tokens >= 1.0:
-                tokens -= 1.0
-                out_flags.append(False)
-            else:
-                out_flags.append(True)
+        flags, _, _ = token_bucket(pdf[ts_col], burst, None, rate, burst)
         pdf = pdf.copy()
-        pdf["_discarded"] = out_flags
+        pdf["_discarded"] = flags
         return pdf
 
-    # charged/exempt must PARTITION the frame under SQL three-valued
-    # logic: with a NULL type, (type == msg) is NULL, so both a plain
-    # filter and its ~negation exclude the row — it would silently
-    # vanish from the union. coalesce(..., False) makes the condition
-    # two-valued; exempt is then its exact complement.
-    is_charged = F.coalesce(
-        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
-        F.lit(False),
-    )
-    charged = df.filter(is_charged)
-    exempt = df.filter(~is_charged).withColumn("_discarded", F.lit(False))
-
+    charged, exempt = split_charged(df, site_col, type_col, message_type)
     out_schema = T.StructType(
         df.schema.fields + [T.StructField("_discarded", T.BooleanType())]
     )

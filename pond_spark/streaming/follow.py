@@ -62,7 +62,15 @@ def _source(
     modified_after: dt.datetime | None,
     max_files_per_trigger: int | None,
 ) -> DataFrame:
-    reader = spark.readStream.schema(LOG_SCHEMA).format("parquet")
+    # retention may evict a file (and its emptied p_date= directory)
+    # between the source listing it and a batch reading it; evicted
+    # data is gone by the ring-buffer semantics, so both the listing
+    # and the read skip it instead of failing the stream
+    reader = (
+        spark.readStream.schema(LOG_SCHEMA)
+        .format("parquet")
+        .option("ignoreMissingFiles", "true")
+    )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if modified_after is not None:

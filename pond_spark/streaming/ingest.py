@@ -24,9 +24,8 @@ needed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pond_spark.sources.ingest import ingest_batch
+from pond_spark.sources.ingest import METRICS_SCHEMA, ingest_batch
 from pond_spark.sources.store import LogStore
 
 
@@ -49,7 +48,7 @@ def ingest_stream(
         store.append(res.stored)
         spark.createDataFrame(
             [(batch_id, res.n_received, res.n_malformed, res.n_discarded)],
-            "batch_id long, n_received long, n_malformed long, n_discarded long",
+            METRICS_SCHEMA,
         ).write.mode("append").parquet(metrics_dir)
 
     return (

@@ -28,8 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pond_spark.streaming.conf import set_state_partitions
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pond_spark.sources.ingest import split_charged, token_bucket
+from pond_spark.streaming.conf import set_state_partitions
 
 
 def rate_limit_stream(
@@ -67,10 +69,7 @@ def rate_limit_stream(
         frames: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tokens, last_us = state.get
-        else:
-            tokens, last_us = float(cap), -1
+        tokens, last_us = state.get if state.exists else (float(cap), -1)
         # concatenate the group's frames BEFORE sorting: Arrow splits a
         # large group into multiple frames in no guaranteed order, so a
         # per-frame sort would process a later-frame-but-earlier-ts
@@ -85,39 +84,15 @@ def rate_limit_stream(
         pdf = pd.concat(parts, ignore_index=True).sort_values(
             ["timestamp", "id"], na_position="first"
         )
-        flags = []
-        for ts in pdf["timestamp"]:
-            if ts is not None and not pd.isna(ts):
-                now_us = int(ts.value // 1000)
-                if last_us >= 0 and now_us > last_us:
-                    tokens = min(cap, tokens + rate * (now_us - last_us) / 1e6)
-                # only ADVANCE the clock: a late event from a previous
-                # micro-batch must not rewind last_us, or the next
-                # on-time event would re-credit refill time that was
-                # already granted before the checkpoint (sorting can't
-                # see across batches)
-                last_us = max(last_us, now_us)
-            if tokens >= 1.0:
-                tokens -= 1.0
-                flags.append(False)
-            else:
-                flags.append(True)
+        flags, tokens, last = token_bucket(
+            pdf["timestamp"], tokens, None if last_us < 0 else last_us, rate, cap
+        )
         pdf = pdf.copy()
         pdf["_discarded"] = flags
-        state.update((float(tokens), int(last_us)))
+        state.update((float(tokens), -1 if last is None else int(last)))
         yield pdf
 
-    # two-valued split (same fix as the batch twin, sources/ingest.py):
-    # a NULL type makes both a plain filter and its ~negation reject
-    # the row under three-valued logic — the record would silently
-    # disappear from the union
-    is_charged = F.coalesce(
-        (F.col(type_col) == message_type) & F.col(site_col).isNotNull(),
-        F.lit(False),
-    )
-    charged = sdf.filter(is_charged)
-    exempt = sdf.filter(~is_charged).withColumn("_discarded", F.lit(False))
-
+    charged, exempt = split_charged(sdf, site_col, type_col, message_type)
     limited = charged.groupBy(site_col).applyInPandasWithState(
         bucket, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

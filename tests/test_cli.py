@@ -309,6 +309,29 @@ def test_main_build_errors_exit_2_not_traceback(spark, store_dir, capsys):
     assert capsys.readouterr().out.strip() == ""
 
 
+@pytest.mark.parametrize(
+    "verbs, message",
+    [
+        (["--follow", "window=5"], "WINDOW"),
+        (["--continue", "window=5@2"], "WINDOW"),
+        (["--follow", "group_site=5"], "GROUP_SITE"),
+        (["--continue", "group_site=3"], "GROUP_SITE"),
+        (["--follow", "--last"], "LAST and FOLLOW"),
+    ],
+)
+def test_main_follow_refuses_batch_only_verbs(store_dir, capsys, verbs, message):
+    """--follow/--continue stream the filter only; the verbs they
+    cannot honour are refused (Connection.cxx:177-229) with exit 2 and
+    the message on stderr instead of being silently dropped."""
+    from pond_spark.cli import main
+
+    argv = [f"--store={store_dir}", "--follow-duration=0", "query", *verbs]
+    assert main(argv) == 2
+    captured = capsys.readouterr()
+    assert message in captured.err
+    assert captured.out == ""
+
+
 def test_main_follow_max_batch_rows_caps_collect(spark, store_dir, capsys):
     """--max-batch-rows=N truncates each micro-batch's driver collect
     (the --continue backfill safety valve): only N lines print, with a

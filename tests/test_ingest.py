@@ -164,23 +164,34 @@ def test_store_roundtrip_and_clone(spark, tmp_path, logs):
 
 
 def test_store_compact_merges_small_files(spark, tmp_path, logs):
-    s = LogStore(spark, str(tmp_path / "c"))
-    for _ in range(4):  # repeated appends → many small files per date
-        s.append(logs)
-    before = s.read().count()
-    pdirs = sorted(glob.glob(str(tmp_path / "c" / "p_date=*")))
-    assert pdirs
-    files_before = sum(
-        len(glob.glob(os.path.join(d, "*.parquet"))) for d in pdirs
-    )
-    report = s.compact()
-    files_after = sum(
-        len(glob.glob(os.path.join(d, "*.parquet")))
-        for d in glob.glob(str(tmp_path / "c" / "p_date=*"))
-    )
-    assert sum(report.values()) == files_before - files_after
-    assert files_after < files_before
-    assert s.read().count() == before  # data unchanged
+    """compact() merges small files without changing the data, and
+    neither append() nor compact() leaks the TIMESTAMP_MICROS output
+    encoding they write with into the session conf."""
+    key = "spark.sql.parquet.outputTimestampType"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        s = LogStore(spark, str(tmp_path / "c"))
+        for _ in range(4):  # repeated appends → many small files per date
+            s.append(logs)
+        assert spark.conf.get(key) == "INT96"  # append didn't leak
+        before = s.read().count()
+        pdirs = sorted(glob.glob(str(tmp_path / "c" / "p_date=*")))
+        assert pdirs
+        files_before = sum(
+            len(glob.glob(os.path.join(d, "*.parquet"))) for d in pdirs
+        )
+        report = s.compact()
+        assert spark.conf.get(key) == "INT96"  # compact didn't leak
+        files_after = sum(
+            len(glob.glob(os.path.join(d, "*.parquet")))
+            for d in glob.glob(str(tmp_path / "c" / "p_date=*"))
+        )
+        assert sum(report.values()) == files_before - files_after
+        assert files_after < files_before
+        assert s.read().count() == before  # data unchanged
+    finally:
+        spark.conf.set(key, session_value)
 
 
 def test_store_retain_drops_aged_partitions(spark, tmp_path, logs):

@@ -947,3 +947,60 @@ def test_rhp_bucket_vectorized_bit_exact(spark):
         assert hof[9002] == vec[9002] == 0
         assert hof[9003] == vec[9003] == (1 << nbits) - 1
         assert hof[9004] == vec[9004] == 0  # null element -> null dot
+
+
+def test_cross_scores_vectorized_bit_exact(spark):
+    """The Arrow/numpy cross_scores backend must emit exactly the JVM
+    fold's (qid, nid, cosine) set — same pairs dropped for a NULL
+    cosine, same NaN pairs, same 6-decimal values — for float32 and
+    float64 columns, with and without the dim-unrolled form. The
+    degenerate rows cover every class the backend special-cases: NULL
+    vector, null element, NaN, ±inf, zero norm, overflow and lengths
+    shorter and longer than the rest."""
+    from pond_spark.similarity.brute import cross_scores
+
+    k = 8
+    rng = random.Random(0xC05)
+
+    def rand_vec(n=k):
+        return [rng.uniform(-1, 1) for _ in range(n)]
+
+    degenerate = [
+        None,                                    # NULL vector
+        [None] + [0.3] * (k - 1),                # null element
+        [math.nan] + [0.3] * (k - 1),            # NaN
+        [math.inf] + [0.3] * (k - 1),            # +inf
+        [0.3] * (k - 1) + [-math.inf],           # -inf
+        [0.0] * k,                               # zero norm
+        [1e30] * k,                              # overflows as float64 fold
+        [0.5] * (k - 2),                         # short
+        rand_vec(k + 3),                         # long: dim=k reads k
+    ]
+    left_rows = [(i, rand_vec()) for i in range(20)]
+    left_rows += [(100 + i, v) for i, v in enumerate(degenerate)]
+    right_rows = [(1000 + i, rand_vec()) for i in range(15)]
+    right_rows += [(1100 + i, v) for i, v in enumerate(degenerate)]
+
+    def as_set(rows):
+        # NaN != NaN: compare NaN cosines by a sentinel
+        return {
+            (r.qid, r.nid, "nan" if math.isnan(r.cosine) else r.cosine)
+            for r in rows
+        }
+
+    for elem in ("float", "double"):
+        schema = f"vec_id long, embedding array<{elem}>"
+        left = spark.createDataFrame(left_rows, schema)
+        right = spark.createDataFrame(right_rows, schema)
+        for dim in (None, k):
+            jvm, vec = (
+                as_set(
+                    cross_scores(left, right, dim=dim, vectorized=v).collect()
+                )
+                for v in (False, True)
+            )
+            assert jvm, (elem, dim)
+            assert any(c == "nan" for _q, _n, c in jvm), (elem, dim)
+            assert jvm == vec, (
+                elem, dim, sorted(jvm - vec)[:5], sorted(vec - jvm)[:5]
+            )

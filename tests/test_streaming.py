@@ -85,6 +85,59 @@ def test_follow_skips_history(spark, tmp_path):
     assert got == {6, 7, 8}  # no history (Q6: FOLLOW has no initial snapshot)
 
 
+def test_follow_survives_retention_of_listed_files(spark, tmp_path):
+    """FOLLOW must outlive retain(): a file the source has listed and
+    planned into a micro-batch but not yet read may be evicted under it
+    (ring-buffer semantics — the data is gone, so skipping it is
+    correct) without killing the stream. maxFilesPerTrigger=1 puts one
+    file in each batch, and the eviction runs in the second batch's
+    sink before it reads, so the race is hit every time."""
+    import glob
+
+    from pond_spark.sources.store import LogStore
+
+    path = str(tmp_path / "store")
+    store = LogStore(spark, path)
+    subscribe_at = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    subscribe_at -= dt.timedelta(seconds=5)  # mtimes have 1 s granularity
+    # newer day first, so it is the first file by mtime; the older day
+    # is the second file and the one an age cut evicts
+    store.append(spark.createDataFrame(
+        _rows([1, 2], "a", dt.datetime(2024, 1, 2, 10)), LOG_SCHEMA))
+    time.sleep(1.1)
+    store.append(spark.createDataFrame(
+        _rows([3, 4], "a", dt.datetime(2024, 1, 1, 10)), LOG_SCHEMA))
+    for day in ("2024-01-01", "2024-01-02"):  # one file per date dir
+        assert len(glob.glob(f"{path}/p_date={day}/*.parquet")) == 1
+
+    seen: list[list[int]] = []
+
+    def sink(batch_df, _bid):
+        if len(seen) == 1:
+            store.retain(
+                max_age=dt.timedelta(days=1),
+                now=dt.datetime(2024, 1, 2, 12),
+            )
+            assert not glob.glob(f"{path}/p_date=2024-01-01")
+        seen.append(sorted(r.id for r in batch_df.select("id").collect()))
+
+    stream = follow_stream(
+        spark, path, since_now=subscribe_at, max_files_per_trigger=1
+    )
+    q = stream.writeStream.foreachBatch(sink).start()
+    try:
+        q.processAllAvailable()
+        assert seen == [[1, 2], []]  # the evicted day is skipped
+        store.append(spark.createDataFrame(
+            _rows([5, 6], "a", dt.datetime(2024, 1, 3, 10)), LOG_SCHEMA))
+        q.processAllAvailable()
+        assert q.isActive
+        delivered = [i for ids in seen for i in ids]
+        assert sorted(delivered) == [1, 2, 5, 6]  # new day exactly once
+    finally:
+        q.stop()
+
+
 def test_follow_visitors_session_window(spark, tmp_path):
     store = str(tmp_path / "store")
     t0 = dt.datetime(2024, 1, 1, 10)
@@ -1488,281 +1541,3 @@ def test_asof_stream_horizon_holds_back_emission(spark, tmp_path):
     sentinel(close_line + dt.timedelta(minutes=5))
     sentinel(close_line + dt.timedelta(minutes=10))
     assert ("k", "v1") in drain("asof_hold2")
-
-
-def test_asof_join_stream_fused_matches_batch_within_horizon(spark, tmp_path):
-    """Round-10 #8: the FUSED (transformWithState) as-of twin must
-    reproduce the chained twin's contract on the same adversarial
-    fixture — single-struct carry, inclusive equal-ts bound,
-    payload-tuple tiebreak, horizon NULLing, NULL padding for a
-    right-less key. Same expected set as
-    test_asof_join_stream_matches_batch_within_horizon."""
-    import pytest as _pytest
-
-    import pyspark.sql.types as T
-    from pyspark.sql import functions as F
-
-    from pond_spark.operators.asof import asof_join
-    from pond_spark.streaming.asof_tws import (
-        asof_join_stream_fused, tws_available,
-    )
-
-    if not tws_available():
-        # the container lacks google.protobuf, transformWithState's
-        # runtime protocol dependency (asof_tws.tws_available) — the
-        # operator refuses loudly; assert THAT contract and skip the
-        # parity leg until an environment with protobuf runs it
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            asof_join_stream_fused(
-                spark.readStream.format("rate").load(),
-                spark.readStream.format("rate").load(),
-                ["value"], horizon_seconds=60,
-            )
-        _pytest.skip("google.protobuf absent: transformWithState "
-                     "runtime unavailable in this container")
-
-    lsch = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("timestamp", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-        ]
-    )
-    rsch = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("timestamp", T.TimestampType()),
-            T.StructField("tag", T.StringType()),
-            T.StructField("weight", T.LongType()),
-            T.StructField("marker_ts", T.TimestampType()),
-        ]
-    )
-    ldir, rdir = str(tmp_path / "fl"), str(tmp_path / "fr")
-    t0 = dt.datetime(2024, 3, 1, 8)
-
-    def at(sec):
-        return t0 + dt.timedelta(seconds=sec)
-
-    rrows = [
-        ("k1", at(0), "A", 1, at(0)),
-        ("k1", at(20), "B", 2, at(20)),
-        ("k1", at(20), "B2", None, at(20)),
-        ("k1", at(180), None, 9, at(180)),
-    ]
-    lrows = [
-        ("k1", at(10), 1),
-        ("k1", at(25), 2),
-        ("k1", at(120), 3),
-        ("k1", at(20), 5),
-        ("k1", at(210), 6),
-        ("k2", at(60), 4),
-    ]
-    spark.createDataFrame(lrows, lsch).coalesce(1).write.mode("append").parquet(ldir)
-    spark.createDataFrame(rrows, rsch).coalesce(1).write.mode("append").parquet(rdir)
-    for hh in (1, 2):
-        spark.createDataFrame(
-            [("kz", t0 + dt.timedelta(hours=hh), 999)], lsch
-        ).coalesce(1).write.mode("append").parquet(ldir)
-        spark.createDataFrame(
-            [("kz", t0 + dt.timedelta(hours=hh), "Z", 0, None)], rsch
-        ).coalesce(1).write.mode("append").parquet(rdir)
-
-    ls = spark.readStream.schema(lsch).option("maxFilesPerTrigger", "1").parquet(ldir)
-    rs = spark.readStream.schema(rsch).option("maxFilesPerTrigger", "1").parquet(rdir)
-    _drain(
-        asof_join_stream_fused(ls, rs, ["key"], horizon_seconds=60),
-        "asof_fused",
-        timeout=240,
-    )
-    got = {
-        (r.key, r.timestamp, r.event_id): (r.tag, r.weight, r.marker_ts)
-        for r in spark.sql(
-            "select * from asof_fused where key != 'kz'"
-        ).collect()
-    }
-    batch = asof_join(
-        spark.read.parquet(ldir).filter(F.col("key") != "kz"),
-        spark.read.parquet(rdir).filter(F.col("key") != "kz"),
-        ["key"],
-    )
-    exp = {}
-    for r in batch.collect():
-        hit = r.marker_ts is not None and (
-            r.timestamp - r.marker_ts
-        ) < dt.timedelta(seconds=60)
-        exp[(r.key, r.timestamp, r.event_id)] = (
-            (r.tag, r.weight, r.marker_ts) if hit else (None, None, None)
-        )
-    assert got == exp
-
-
-def test_asof_fused_processor_null_mask_and_strict_watermark():
-    """ADVICE r10 (asof_tws): the processor's null transport and close
-    rule, driven DIRECTLY (fake handle/states — no protobuf, no Spark
-    runtime needed):
-
-    - a mask bit recovers a genuine NULL long payload (the old NaN
-      sentinel path upcast the column to float64 and relied on
-      implicit float->int casts);
-    - an int64 value past 2^53 survives exactly (float64 would round);
-    - a GENUINE NaN float payload stays NaN (the old ``v != v -> None``
-      coercion erased it);
-    - a left row closes only when the watermark is STRICTLY past its
-      timestamp — an equal-ts right arriving in a later trigger is
-      on-time under the inclusive match bound and must still win.
-    """
-    import math
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
-    from pond_spark.streaming.asof_tws import _AsofProcessor
-
-    class FakeListState:
-        def __init__(self):
-            self.rows = []
-
-        def get(self):
-            return iter(self.rows)
-
-        def put(self, rows):
-            self.rows = list(rows)
-
-        def appendList(self, rows):
-            self.rows.extend(rows)
-
-        def clear(self):
-            self.rows = []
-
-    class FakeHandle:
-        def __init__(self):
-            self.states, self.timers = {}, []
-
-        def getListState(self, name, schema):
-            return self.states.setdefault(name, FakeListState())
-
-        def registerTimer(self, ts_ms):
-            self.timers.append(ts_ms)
-
-    class Timers:
-        def __init__(self, wm_ms):
-            self._wm = wm_ms
-
-        def getCurrentWatermarkInMs(self):
-            return self._wm
-
-    # layout: key, lval | pay fpay | _ml_lval _mr_pay _mr_fpay | _ets _side
-    cols = ["key", "lval", "pay", "fpay",
-            "_ml_lval", "_mr_pay", "_mr_fpay", "_ets", "_side"]
-    big = (1 << 60) + 1  # not float64-representable
-
-    def batch(rows):
-        return [pd.DataFrame(rows, columns=cols)]
-
-    proc = _AsofProcessor(
-        StructType([StructField("ts_us", LongType()),
-                    StructField("lval", LongType())]),
-        StructType([StructField("ts_us", LongType()),
-                    StructField("pay", LongType()),
-                    StructField("fpay", DoubleType())]),
-        horizon_us=60_000_000, n_key=1, n_left=2, n_pay=2,
-        out_cols=["key", "lval", "pay", "fpay"],
-    )
-    handle = FakeHandle()
-    proc.init(handle)
-    ts = pd.Timestamp("2024-03-01 08:00:10")
-    ts_us = ts.value // 1000           # epoch micros (processor units)
-    ts_ms = ts.value // 1_000_000      # epoch ms (watermark units)
-    r9_us = pd.Timestamp("2024-03-01 08:00:09").value // 1000
-
-    # trigger 1 (wm=0): left@10s carrying a big int64; right@9s with a
-    # MASKED (null) long payload and genuine NaN float; a NaT row must
-    # be skipped, and zero-padding under a raised mask must not leak
-    out1 = list(proc.handleInputRows(("k",), batch([
-        ("k", big, 0, 0.0, False, True, True, ts, 0),
-        ("k", 0, 0, math.nan, True, True, False,
-         pd.Timestamp("2024-03-01 08:00:09"), 1),
-        ("k", 0, 0, 0.0, True, True, True, pd.NaT, 1),
-    ]), Timers(0)))
-    assert out1 == []
-    assert handle.states["lefts"].rows == [(ts_us, big)]
-    # masked long payload recovered as None (zero padding must not
-    # leak through a raised mask), genuine NaN kept as NaN
-    (rts, rpay, rfpay), = handle.states["rights"].rows
-    assert (rts, rpay) == (r9_us, None) and math.isnan(rfpay)
-    # timer just past the pending left's close point
-    assert handle.timers == [ts_ms + 1]
-
-    # trigger 2 (wm == left ts exactly): must NOT emit — an equal-ts
-    # right is still on-time and arrives here with a richer payload
-    out2 = list(proc.handleInputRows(("k",), batch([
-        ("k", 0, big, 2.5, True, False, False, ts, 1),
-    ]), Timers(ts_ms)))
-    assert out2 == [], "left closed at wm == ts; equal-ts right lost"
-
-    # trigger 3 (wm one ms past): emits with the equal-ts right's
-    # payload, big ints exact end-to-end
-    out3 = list(proc.handleInputRows(("k",), batch([]), Timers(ts_ms + 1)))
-    (row,), = [list(o.itertuples(index=False)) for o in out3]
-    assert row.key == "k" and row.lval == big
-    assert row.pay == big and row.fpay == 2.5
-    assert handle.states["lefts"].rows == []
-
-
-def test_asof_fused_plan_builds_and_unified_columns_never_null(
-    spark, monkeypatch,
-):
-    """The fused operator's PLAN construction (the Spark-side
-    coalesce+mask select) must build without protobuf — only query
-    START needs the state-server protocol. Asserts the output schema
-    contract and, on the batch twin of the unified select, that value
-    columns carry no nulls (int64 stays int64 across the Arrow hop)
-    while masks recover them."""
-    import datetime as dt
-
-    import pond_spark.streaming.asof_tws as tws
-
-    monkeypatch.setattr(tws, "tws_available", lambda: True)
-    lsch = "key string, timestamp timestamp, event_id long"
-    rsch = "key string, timestamp timestamp, tag string, weight long"
-    ls = spark.readStream.format("rate").load().selectExpr(
-        "cast(value as string) key", "timestamp",
-        "value event_id",
-    )
-    rs = spark.readStream.format("rate").load().selectExpr(
-        "cast(value as string) key", "timestamp",
-        "cast(value as string) tag", "value weight",
-    )
-    out = tws.asof_join_stream_fused(ls, rs, ["key"], horizon_seconds=60)
-    # left non-key cols (incl. its ts) then right payload
-    assert out.columns == ["key", "timestamp", "event_id", "tag", "weight"]
-    assert out.isStreaming
-
-    # batch twin of the unified layout: a null long must ride as
-    # (0, mask=True) — never as a null that upcasts the Arrow batch
-    t0 = dt.datetime(2024, 3, 1, 8)
-    big = (1 << 60) + 1
-    lb = spark.createDataFrame([("k", t0, big), ("k", t0, None)], lsch)
-    rb = spark.createDataFrame([("k", t0, None, None)], rsch)
-    from pyspark.sql import functions as F
-
-    lv_type = {"event_id": lb.schema["event_id"].dataType}
-    pay_type = {c: rb.schema[c].dataType for c in ("tag", "weight")}
-    unified = lb.select(
-        F.col("key"),
-        F.coalesce(F.col("event_id"), F.lit(0)).alias("event_id"),
-        *[tws._zero_lit(pay_type[c]).alias(f"_r_{c}")
-          for c in ("tag", "weight")],
-        F.col("event_id").isNull().alias("_ml_event_id"),
-        F.lit(True).alias("_mr_tag"),
-        F.lit(True).alias("_mr_weight"),
-        F.col("timestamp").alias("_ets"),
-        F.lit(0).alias("_side"),
-    )
-    pdf = unified.toPandas()
-    assert str(pdf["event_id"].dtype) == "int64"      # no float upcast
-    assert int(pdf["event_id"][0]) == big             # exact past 2^53
-    assert bool(pdf["_ml_event_id"][1])               # null recovered
-    assert str(pdf["_r_weight"].dtype) == "int64"     # typed zero pad
